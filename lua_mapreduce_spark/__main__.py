@@ -38,6 +38,7 @@ import sys
 from typing import Any
 
 from lua_mapreduce_spark.mapreduce import MapReduceJob
+from lua_mapreduce_spark.session import DAEMON_CONFS
 
 
 def load_task_module(path: str) -> Any:
@@ -154,9 +155,13 @@ def resolve_master(master: str, num_workers: int | None) -> str:
     """Apply -n to PLAIN local masters only (`local`, `local[N]`,
     `local[*]`). `local-cluster[...]` simulates a distributed deployment
     and non-local masters size their own workers — both pass through."""
-    if num_workers is None or not re.fullmatch(r"local(\[[^\]]*\])?", master):
+    if num_workers is None or not is_plain_local(master):
         return master
     return f"local[{num_workers}]"
+
+
+def is_plain_local(master: str) -> bool:
+    return re.fullmatch(r"local(\[[^\]]*\])?", master) is not None
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -193,11 +198,12 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     names = ", ".join(os.path.basename(p) for p, _ in mods)
-    spark = (
-        SparkSession.builder.master(master)
-        .appName(f"lua-mapreduce: {names}")
-        .getOrCreate()
-    )
+    builder = SparkSession.builder.master(master).appName(f"lua-mapreduce: {names}")
+    if is_plain_local(master):
+        # Other masters' executors may not have this package installed, so
+        # they keep the stock Python daemon.
+        builder = builder.config(map=DAEMON_CONFS)
+    spark = builder.getOrCreate()
     if args.loglevel is not None:
         spark.sparkContext.setLogLevel(args.loglevel.upper())
     try:

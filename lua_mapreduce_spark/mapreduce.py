@@ -91,7 +91,12 @@ class MapReduceJob:
     # -- source -----------------------------------------------------------
     def _source_rdd(self, spark: SparkSession) -> RDD:
         if self.source_df is not None:
-            return self.source_df.rdd.map(lambda row: (row[0], row[1]))
+            # A source with fewer splits than cores (one small parquet file)
+            # would map on one core: spread its rows over all of them.
+            df, cores = self.source_df, spark.sparkContext.defaultParallelism
+            if df.rdd.getNumPartitions() < cores:
+                df = df.repartition(cores)
+            return df.rdd.map(lambda row: (row[0], row[1]))
         tasks = list(self.taskfn(self.arg))  # reference drives taskfn on the server
         parallelism = self.num_partitions or spark.sparkContext.defaultParallelism
         return spark.sparkContext.parallelize(tasks, min(max(len(tasks), 1), parallelism))
@@ -102,15 +107,18 @@ class MapReduceJob:
         mapped = self._source_rdd(spark).flatMap(lambda kv: mapfn(kv[0], kv[1]))
         if reducefn is None:
             return self._filtered(mapped)
+        # PySpark's default is the map side's partition count, which is one
+        # for a one-split source or a one-task taskfn.
+        num_partitions = self.num_partitions or spark.sparkContext.defaultParallelism
         if self.combinefn is not None:
             # Pairwise combiner path: map-side partial aggregation. Only
             # valid when the caller asserts reducefn(k, vs) == fold(combinefn,
             # vs) semantics; reducefn still runs on the (single) combined
             # value list for output-shape fidelity.
-            combined = mapped.reduceByKey(self.combinefn, numPartitions=self.num_partitions)
+            combined = mapped.reduceByKey(self.combinefn, numPartitions=num_partitions)
             return self._filtered(combined.flatMap(lambda kv: reducefn(kv[0], [kv[1]])))
         # Faithful holistic path: reducefn sees the complete value list.
-        grouped = mapped.groupByKey(numPartitions=self.num_partitions)
+        grouped = mapped.groupByKey(numPartitions=num_partitions)
         return self._filtered(grouped.flatMap(lambda kv: reducefn(kv[0], list(kv[1]))))
 
     def _filtered(self, reduced: RDD) -> RDD:

@@ -1650,13 +1650,15 @@ def graph_mst_maximum_spanning(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mst_oracle() -> str:
     # unrolled doublings of the minimax closure (the kmeans-oracle
     # convention: a fixed-depth iterative operator replayed as a CTE
-    # chain), over the same deterministic ranked edge table
+    # chain), over the same deterministic ranked edge table. Every CTE is
+    # MATERIALIZED: each m_i is read twice by m_{i+1}, and DuckDB inlining
+    # the chain multiplies the work per doubling until it runs out of memory.
     squarings = []
     prev = "m0"
     for i in range(1, _MST_DOUBLINGS + 1):
         cur = f"m{i}"
         squarings.append(
-            f"""{cur} AS (
+            f"""{cur} AS MATERIALIZED (
   SELECT u, v, MIN(b) AS b FROM (
     SELECT u, v, b FROM {prev}
     UNION ALL
@@ -1668,7 +1670,7 @@ def _mst_oracle() -> str:
         prev = cur
     chain = ",\n".join(squarings)
     return f"""
-WITH trade AS (
+WITH trade AS MATERIALIZED (
   SELECT least(cn.n_name, sn.n_name) AS src,
          greatest(cn.n_name, sn.n_name) AS dst,
          COUNT(*) AS n_lines
@@ -1680,11 +1682,11 @@ WITH trade AS (
   JOIN nation sn ON s_nationkey = sn.n_nationkey
   WHERE cn.n_name <> sn.n_name
   GROUP BY 1, 2),
-edges AS (
+edges AS MATERIALIZED (
   SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY n_lines DESC, src, dst)
                  AS BIGINT) AS rank
   FROM trade),
-m0 AS (
+m0 AS MATERIALIZED (
   SELECT src AS u, dst AS v, rank AS b FROM edges
   UNION ALL
   SELECT dst AS u, src AS v, rank AS b FROM edges),

@@ -34,6 +34,17 @@ _RUNTIME_CONFS = {
 }
 
 
+# Confs whose absence changes results, not speed: a failure to set one is
+# raised, while the other runtime confs may stay at a locked-in value.
+_CORRECTNESS_CONFS = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+
+# Build-time confs for sessions the engine builds itself: Python workers
+# start from pyworker.py, which keeps each task from re-reading the zip
+# archives on the worker path (80-200 ms a task otherwise). The workers
+# must be able to import this package.
+DAEMON_CONFS = {"spark.python.daemon.module": "lua_mapreduce_spark.pyworker"}
+
+
 def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs; safe to call repeatedly."""
     for key, value in _RUNTIME_CONFS.items():
@@ -41,9 +52,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
             spark.conf.set(key, value)
         except Exception:
             # Some confs may be locked by the driver's session; the defaults
-            # they locked in are acceptable, only TZ is a hard requirement
-            # and that one is always runtime-settable.
-            pass
+            # they locked in only cost speed, unless the conf is one of the
+            # correctness confs.
+            if key in _CORRECTNESS_CONFS:
+                raise
     return spark
 
 
@@ -57,5 +69,6 @@ def get_spark(app_name: str = "lua-mapreduce-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", "32")
+        .config(map=DAEMON_CONFS)
     )
     return configure_runtime(builder.getOrCreate())

@@ -104,6 +104,21 @@ def test_source_df_replaces_taskfn(spark):
     assert job.run(spark) == GOLDEN
 
 
+def test_one_split_source_df_maps_and_reduces_on_every_core(spark):
+    """A one-partition source_df is spread over defaultParallelism map
+    partitions and shuffles into as many reduce partitions (PySpark's own
+    default would keep both at one), with the same results."""
+    cores = spark.sparkContext.defaultParallelism
+    src = spark.createDataFrame(list(FIXTURES.items()), "key string, value string").coalesce(1)
+    sum_reducefn = lambda k, vs: [(k, sum(vs))]  # noqa: E731
+    for reduce_fn, combinefn in ((reducefn, None), (sum_reducefn, lambda a, b: a + b)):
+        job = MapReduceJob(source_df=src, mapfn=mapfn, reducefn=reduce_fn, combinefn=combinefn)
+        assert job._source_rdd(spark).getNumPartitions() == cores
+        reduced = job._reduced_rdd(spark)
+        assert reduced.getNumPartitions() == cores
+        assert dict(reduced.collect()) == GOLDEN
+
+
 def test_filterfn_runs_after_reduce(spark):
     """filterfn (reference README TODO #5) sees REDUCE output — keys whose
     count fails the predicate vanish from run() and to_dataframe() alike,
