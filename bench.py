@@ -371,7 +371,7 @@ EXTENDED_MEDIAN = {
     "sim_recall_at_k_report",
     # r16 optimization round: the trade-graph substrate (edges + the
     # depth-12 distance walk) is now memoized across the 14 graph_*
-    # consumers (analytics7._TRADE_CACHE). The alphabetically-first
+    # consumers (the trade_edges/trade_dists memos). The alphabetically-first
     # extended-tier consumer pays the cold edges build in its first
     # run — a median absorbs it the way the other memoized-build
     # first-consumers are handled.
@@ -658,18 +658,15 @@ def _headline_phase(sf_dir: str) -> dict:
     _calibration_probe(spark)
     calib_start = _median_time(lambda: _calibration_probe(spark))
 
-    from lua_mapreduce_spark.operators.dedup import (
-        _minhash_signatures,
-        clear_signature_cache,
+    from lua_mapreduce_spark.memo import forget
+    from lua_mapreduce_spark.operators.analytics import (
+        _copurchase_derived,
+        _copurchase_pairs,
     )
-    from lua_mapreduce_spark.operators.hygiene import (
-        _semdedup_cells,
-        clear_cells_cache,
-    )
-    from lua_mapreduce_spark.operators.similarity import (
-        _km_centroids,
-        clear_centroid_cache,
-    )
+    from lua_mapreduce_spark.operators.analytics2 import _mb_items
+    from lua_mapreduce_spark.operators.dedup import _minhash_signatures
+    from lua_mapreduce_spark.operators.hygiene import _semdedup_cells
+    from lua_mapreduce_spark.operators.similarity import _km_centroids
 
     # One full UNTIMED pass over the headline set before the timed runs:
     # each query's first execution absorbs one-time costs that are not plan
@@ -690,7 +687,7 @@ def _headline_phase(sf_dir: str) -> dict:
                 # Cold/warm split: the signature-cache build dominates the
                 # LSH query's first run, so it gets its own line — per-round
                 # deltas on the query itself stay interpretable.
-                clear_signature_cache()
+                forget("minhash_signatures")
                 t0 = time.perf_counter()
                 _minhash_signatures(spark, sf_dir).count()
                 raw.setdefault("dedup_minhash_signature_build", []).append(
@@ -701,7 +698,7 @@ def _headline_phase(sf_dir: str) -> dict:
                 # assignment is a build-once cached relation shared by
                 # SemDeDup and the cluster-balanced sampler; time it as
                 # its own line so the query line is steady-state.
-                clear_cells_cache()
+                forget("semdedup_cells")
                 t0 = time.perf_counter()
                 _semdedup_cells(spark, sf_dir).count()
                 raw.setdefault("semdedup_cells_build", []).append(
@@ -714,17 +711,11 @@ def _headline_phase(sf_dir: str) -> dict:
                 # build cost gets its own line and the query lines are
                 # steady-state. The DERIVED relations (degrees and the
                 # src-partitioned symmetrized layout) are ALSO shared,
-                # ALSO wiped by clear_copurchase_cache(), and previously
-                # got silently charged to whichever graph query touched
-                # them first (~1.6 s misattributed to the r9 graph-family
-                # "regression") — so they get their own build lines too.
-                from lua_mapreduce_spark.operators.analytics import (
-                    _copurchase_derived,
-                    _copurchase_pairs,
-                    clear_copurchase_cache,
-                )
-
-                clear_copurchase_cache()
+                # ALSO forgotten here, and previously got silently charged
+                # to whichever graph query touched them first (~1.6 s
+                # misattributed to the r9 graph-family "regression") — so
+                # they get their own build lines too.
+                forget("copurchase_pairs", "copurchase_deg", "copurchase_sym")
                 t0 = time.perf_counter()
                 _copurchase_pairs(spark, sf_dir).count()
                 raw.setdefault("copurchase_edges_build", []).append(
@@ -742,15 +733,8 @@ def _headline_phase(sf_dir: str) -> dict:
                 )
             if name == "events_market_basket":
                 # Same split for the basket items relation (shared with no
-                # other query, but cached per sf_dir): clearing it here also
-                # keeps checkpoint blocks from accumulating across bench
-                # scale factors within one process.
-                from lua_mapreduce_spark.operators.analytics2 import (
-                    _mb_items,
-                    clear_basket_cache,
-                )
-
-                clear_basket_cache()
+                # other query, but memoized per sf_dir).
+                forget("mb_items")
                 t0 = time.perf_counter()
                 _mb_items(spark, sf_dir).count()
                 raw.setdefault("basket_items_build", []).append(
@@ -760,7 +744,7 @@ def _headline_phase(sf_dir: str) -> dict:
                 # Same split for IVF: the iterative k-means training is a
                 # build-once cost (cached per sf_dir like the signatures),
                 # separate from steady-state probe latency.
-                clear_centroid_cache()
+                forget("km_centroids")
                 t0 = time.perf_counter()
                 _km_centroids(spark, sf_dir).count()
                 raw.setdefault("sim_ivf_centroid_train", []).append(

@@ -42,6 +42,7 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
+from lua_mapreduce_spark.memo import memo
 
 # --------------------------------------------------------------------------
 # HyperLogLog with explicit, oracle-replayable registers
@@ -225,63 +226,53 @@ _BC_HOPS = 12  # hop bound — the graph_closeness_centrality truncation
 #               convention (Boldi & Vigna 2014 treat truncated variants
 #               as first-class; identical bound in engine and oracle)
 
-# Memoized (edges, dists, sigma) triple shared by the node-grain
-# betweenness and the edge-grain Girvan-Newman step (analytics13) — the
-# _nsw_base convention: localCheckpoint materializes eagerly, only the
-# current (session, sf_dir) entry is kept, so the 12-level sigma DP runs
-# once per input when both queries execute in one process (bench, the
-# driver's per-query loop).
-_BC_CACHE: dict = {}
-
-
-def clear_bc_cache() -> None:
-    _BC_CACHE.clear()
-
-
 def _bc_base(spark: SparkSession, sf_dir: str):
     """(edges, dists, sigma): the bounded trade-graph edge relation, the
     <=_BC_HOPS-hop shortest distances, and the level-synchronous
     shortest-path-count DP — all localCheckpoint'd (<= 625-row
-    relations; see graph_betweenness_centrality's scale-shape note)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BC_CACHE:
-        return _BC_CACHE[key]
-    _BC_CACHE.clear()
-    from lua_mapreduce_spark.operators.analytics7 import (
-        _CC_HOPS,
-        _trade_dists,
-        _trade_edges_ck,
-    )
+    relations; see graph_betweenness_centrality's scale-shape note).
+    Memoized, and shared by the node-grain betweenness and the edge-grain
+    Girvan-Newman step (analytics13), so the 12-level sigma DP runs once
+    per input when both queries execute in one process (bench, the
+    driver's per-query loop)."""
 
-    # The shared memoized walk IS this module's bound, renamed to the
-    # local `d` convention; the assert keeps the equality load-bearing.
-    assert _BC_HOPS == _CC_HOPS
-    edges = _trade_edges_ck(spark, sf_dir)
-    dists = _trade_dists(spark, sf_dir).withColumnRenamed("hops", "d")
+    def build():
+        from lua_mapreduce_spark.operators.analytics7 import (
+            _CC_HOPS,
+            _trade_dists,
+            _trade_edges_ck,
+        )
 
-    # Level-synchronous path-count DP over the hop levels.
-    sigma = (
-        edges.join(dists, ["src", "dst"])
-        .filter(F.col("d") == 1)
-        .select("src", "dst", F.lit(1).cast("bigint").alias("sigma"), "d")
-        .localCheckpoint(eager=True)
-    )
-    for lvl in range(2, _BC_HOPS + 1):
-        prev = sigma.filter(F.col("d") == lvl - 1).select(
-            F.col("src").alias("w"), F.col("dst").alias("t"), "sigma"
+        # The shared memoized walk IS this module's bound, renamed to the
+        # local `d` convention; the assert keeps the equality load-bearing.
+        assert _BC_HOPS == _CC_HOPS
+        edges = _trade_edges_ck(spark, sf_dir)
+        dists = _trade_dists(spark, sf_dir).withColumnRenamed("hops", "d")
+
+        # Level-synchronous path-count DP over the hop levels.
+        sigma = (
+            edges.join(dists, ["src", "dst"])
+            .filter(F.col("d") == 1)
+            .select("src", "dst", F.lit(1).cast("bigint").alias("sigma"), "d")
+            .localCheckpoint(eager=True)
         )
-        nxt = (
-            edges.select(F.col("src").alias("s"), F.col("dst").alias("w"))
-            .join(prev, "w")
-            .groupBy(F.col("s").alias("src"), F.col("t").alias("dst"))
-            .agg(F.expr("CAST(SUM(sigma) AS BIGINT)").alias("sigma"))
-            .join(dists, ["src", "dst"])
-            .filter(F.col("d") == lvl)
-            .select("src", "dst", "sigma", "d")
-        )
-        sigma = sigma.unionByName(nxt).localCheckpoint(eager=True)
-    _BC_CACHE[key] = (edges, dists, sigma)
-    return _BC_CACHE[key]
+        for lvl in range(2, _BC_HOPS + 1):
+            prev = sigma.filter(F.col("d") == lvl - 1).select(
+                F.col("src").alias("w"), F.col("dst").alias("t"), "sigma"
+            )
+            nxt = (
+                edges.select(F.col("src").alias("s"), F.col("dst").alias("w"))
+                .join(prev, "w")
+                .groupBy(F.col("s").alias("src"), F.col("t").alias("dst"))
+                .agg(F.expr("CAST(SUM(sigma) AS BIGINT)").alias("sigma"))
+                .join(dists, ["src", "dst"])
+                .filter(F.col("d") == lvl)
+                .select("src", "dst", "sigma", "d")
+            )
+            sigma = sigma.unionByName(nxt).localCheckpoint(eager=True)
+        return edges, dists, sigma
+
+    return memo(spark, sf_dir, "bc_base", build)
 
 
 def graph_betweenness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,6 +38,7 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
+from lua_mapreduce_spark.memo import memo
 
 # MinHash parameters: 32 permutations in 8 bands of 4 rows.
 # h_i(x) = (a_i * (H(x) mod P) + b_i) mod P over the 60-bit md5 base hash.
@@ -403,48 +404,32 @@ WHERE n_common * 1000 >= {_PJ_T} * (sa.n + sb.n - n_common)
 # MinHash + LSH near-dup: the scale path
 # --------------------------------------------------------------------------
 
-# The signature DataFrame is used four times per query (both sides of the
-# band self-join + both verification lookups); persisting it turns four
-# tokenize+hash passes over the full text into one. Memoized per
-# (session, sf_dir) so repeated calls reuse ONE cache entry instead of
-# stacking new ones.
-_MH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_signature_cache() -> None:
-    """Unpersist and drop every memoized signature relation. Called on
-    sf_dir change (below) and exposed for tests/bench so executor storage
-    does not accumulate across scale factors for the life of the process."""
-    for df in _MH_CACHE.values():
-        df.unpersist()
-    _MH_CACHE.clear()
-
-
 def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingles, m0..m31) — one text scan, array-fold minhash,
     persisted (memory-and-disk: at 100 TB the shingle arrays spill, which
-    still beats recomputing regex tokenization four times). Only the
-    current (session, sf_dir) entry is kept live: switching inputs evicts
-    and unpersists the stale signatures."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MH_CACHE:
-        clear_signature_cache()
+    still beats recomputing regex tokenization four times). The relation
+    is used four times per query (both sides of the band self-join + both
+    verification lookups), so persisting it turns four tokenize+hash
+    passes over the full text into one; memoized, so switching inputs
+    unpersists the stale signatures."""
+
+    def build() -> DataFrame:
         arr = _shingle_arrays_df(spark, sf_dir)
         hashed = arr.select(
             "doc_id",
             "shingles",
             F.expr(f"transform(shingles, s -> {md5_bigint_expr('s')})").alias("hs"),
         )
-        mh = hashed.select(
+        return hashed.select(
             "doc_id",
             "shingles",
             *[
                 F.expr(f"array_min(transform(hs, h -> {e}))").alias(f"m{i}")
                 for i, e in enumerate(_minhash_exprs("h"))
             ],
-        )
-        _MH_CACHE[key] = mh.persist()
-    return _MH_CACHE[key]
+        ).persist()
+
+    return memo(spark, sf_dir, "minhash_signatures", build)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

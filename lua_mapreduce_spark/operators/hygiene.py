@@ -46,6 +46,7 @@ from lua_mapreduce_spark.functions.texthash import (
     oracle_words_expr,
     words_expr,
 )
+from lua_mapreduce_spark.memo import memo
 from lua_mapreduce_spark.operators.similarity import (
     _DOT,
     _ORACLE_COS,
@@ -194,20 +195,6 @@ _CENT_COS_ORACLE = (
 )
 
 
-# The assignment relation is referenced three times by SemDeDup alone
-# (both pair sides + the final verdict join) and again by the
-# cluster-balanced sampler; persisting it turns 3-4 centroid-assignment
-# passes over the corpus into one (the _MH_CACHE convention, dedup.py).
-# Only the current (session, sf_dir) entry stays live.
-_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cells_cache() -> None:
-    for df in _CELLS_CACHE.values():
-        df.unpersist()
-    _CELLS_CACHE.clear()
-
-
 def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, cent_id, nrm): nearest-centroid assignment, the
     shared front half of SemDeDup (identical to sim_ivf_topk's cells).
@@ -216,34 +203,39 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sum c_i^2) pair stage below pays one 64-dim fold per pair (the dot)
     instead of three — the norm is the same IEEE double either way
     (identical expression on identical input), so the oracle, which
-    recomputes norms inline, still matches bit-for-bit."""
+    recomputes norms inline, still matches bit-for-bit.
+
+    Persisted and memoized: SemDeDup references it three times (both pair
+    sides + the final verdict join) and the cluster-balanced sampler once
+    more, so 3-4 centroid-assignment passes over the corpus become one."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CELLS_CACHE:
-        return _CELLS_CACHE[key]
-    clear_cells_cache()
-    emb = parallelize_scan(spark, load_table(spark, sf_dir, "embeddings"))
-    cent = _km_centroids(spark, sf_dir)
-    rank_w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cent_id"))
-    cells = (
-        emb.crossJoin(F.broadcast(cent))
-        .select("vec_id", "embedding", "cent_id", F.expr(_CENT_COS_SPARK).alias("ccos"))
-        .withColumn("crank", F.row_number().over(rank_w))
-        .filter(F.col("crank") == 1)
-        .select(
-            "vec_id",
-            "embedding",
-            "cent_id",
-            F.expr(
-                "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE),"
-                " (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-            ).alias("nrm"),
+    def build() -> DataFrame:
+        emb = parallelize_scan(spark, load_table(spark, sf_dir, "embeddings"))
+        cent = _km_centroids(spark, sf_dir)
+        rank_w = Window.partitionBy("vec_id").orderBy(
+            F.desc("ccos"), F.asc("cent_id")
         )
-        .persist()
-    )
-    _CELLS_CACHE[key] = cells
-    return cells
+        return (
+            emb.crossJoin(F.broadcast(cent))
+            .select(
+                "vec_id", "embedding", "cent_id", F.expr(_CENT_COS_SPARK).alias("ccos")
+            )
+            .withColumn("crank", F.row_number().over(rank_w))
+            .filter(F.col("crank") == 1)
+            .select(
+                "vec_id",
+                "embedding",
+                "cent_id",
+                F.expr(
+                    "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE),"
+                    " (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
+                ).alias("nrm"),
+            )
+            .persist()
+        )
+
+    return memo(spark, sf_dir, "semdedup_cells", build)
 
 
 def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:

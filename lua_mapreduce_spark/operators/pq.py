@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
+from lua_mapreduce_spark.memo import memo
 from lua_mapreduce_spark.operators.similarity import (
     _KM_QV,
     _KM_SAMPLE_CAP,
@@ -101,35 +102,22 @@ def _pq_train_pandas(pdf):
     return pd.DataFrame(rows, columns=["m", "code", "cvec"])
 
 
-_PQ_CB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_pq_cache() -> None:
-    _PQ_CB_CACHE.clear()
-
-
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(m, code, cvec): M x K rows, trained once per sf_dir and checkpointed
-    so downstream references don't re-run the training task. Keyed on
-    (applicationId, sf_dir) — the _MH_CACHE convention (dedup.py) — so a
-    SparkSession restart in the same process never serves a checkpointed
-    DataFrame bound to the stopped SparkContext."""
-    import os as _os
+    so downstream references don't re-run the training task; memoized."""
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _PQ_CB_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings")
-    sample = emb.filter(
-        (F.col("vec_id") % _KM_SAMPLE_MOD == 0) & (F.col("vec_id") < _KM_SAMPLE_CAP)
-    ).select("vec_id", F.expr(_KM_QV).alias("qv"))
-    cb = sample.groupBy(F.lit(0).alias("g")).applyInPandas(
-        _pq_train_pandas, "m int, code int, cvec array<double>"
-    )
-    cb = cb.localCheckpoint(eager=True)
-    _PQ_CB_CACHE[key] = cb
-    return cb
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        sample = emb.filter(
+            (F.col("vec_id") % _KM_SAMPLE_MOD == 0)
+            & (F.col("vec_id") < _KM_SAMPLE_CAP)
+        ).select("vec_id", F.expr(_KM_QV).alias("qv"))
+        cb = sample.groupBy(F.lit(0).alias("g")).applyInPandas(
+            _pq_train_pandas, "m int, code int, cvec array<double>"
+        )
+        return cb.localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, "pq_codebooks", build)
 
 
 def _subspaces(df: DataFrame) -> DataFrame:

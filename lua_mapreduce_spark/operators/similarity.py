@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lua_mapreduce_spark.catalog import load_table, parallelize_scan
+from lua_mapreduce_spark.memo import memo
 
 _DIM = 64
 _N_QUERIES = 10  # query set: vec_id < 10
@@ -396,17 +397,6 @@ _KM_SAMPLE_CAP = 2048  # ... capped: training cost is O(1) in corpus size
 _KM_QV = "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
 
 
-# Trained centroids per sf_dir: training is an iterative multi-job pass
-# (like the MinHash signature build in dedup.py), while every consumer
-# needs only the final 8 rows — cache the checkpointed result and let the
-# bench time the build as its own line (sim_ivf_centroid_train).
-_CENT_CACHE: dict[str, DataFrame] = {}
-
-
-def clear_centroid_cache() -> None:
-    _CENT_CACHE.clear()
-
-
 def _km_train_pandas(pdf):
     """All _KM_ITERS Lloyd rounds over the bounded sample, inside one task.
 
@@ -468,25 +458,26 @@ def _km_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever reaches the driver, and the arithmetic is bit-identical to the
     SQL replay (see _km_train_pandas). At 100 TB nothing changes: the
     sample stays bounded, training is one task, and only the 8-row
-    centroid table flows on."""
-    import os as _os
+    centroid table flows on.
 
-    cache_key = _os.path.abspath(sf_dir)
-    cached = _CENT_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings")
-    sample = emb.filter(
-        (F.col("vec_id") % _KM_SAMPLE_MOD == 0) & (F.col("vec_id") < _KM_SAMPLE_CAP)
-    ).select("vec_id", F.expr(_KM_QV).alias("qv"))
-    cent = sample.groupBy(F.lit(0).alias("g")).applyInPandas(
-        _km_train_pandas, "cent_id bigint, cemb array<double>"
-    )
-    # 8 tiny rows referenced several times downstream: materialize once so
-    # consumers don't re-run the training task per reference.
-    result = cent.localCheckpoint(eager=True).select("cent_id", "cemb")
-    _CENT_CACHE[cache_key] = result
-    return result
+    Memoized: every consumer needs only the final 8 rows, so the
+    checkpointed result is shared and the bench times the build as its
+    own line (sim_ivf_centroid_train)."""
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        sample = emb.filter(
+            (F.col("vec_id") % _KM_SAMPLE_MOD == 0)
+            & (F.col("vec_id") < _KM_SAMPLE_CAP)
+        ).select("vec_id", F.expr(_KM_QV).alias("qv"))
+        cent = sample.groupBy(F.lit(0).alias("g")).applyInPandas(
+            _km_train_pandas, "cent_id bigint, cemb array<double>"
+        )
+        # 8 tiny rows referenced several times downstream: materialize once
+        # so consumers don't re-run the training task per reference.
+        return cent.localCheckpoint(eager=True).select("cent_id", "cemb")
+
+    return memo(spark, sf_dir, "km_centroids", build)
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+import tempfile
 from pathlib import Path
 
 import pyarrow.compute as pc
@@ -54,46 +56,62 @@ def _batched_events_dir(sf_dir: str) -> str:
     """Split ``events.parquet`` into _N_STREAM_FILES time-contiguous files
     under a repo-local cache dir, mtimes increasing with the time range so
     the file source (which orders by modification time) replays event time
-    forward. Derived once per sf_dir; a _SUCCESS marker makes the split
-    idempotent. The split is pure metadata+copy work (pyarrow filter on the
+    forward. The split is pure metadata+copy work (pyarrow filter on the
     driver) — at real scale the input would already arrive as many
     time-ordered files and this helper disappears.
 
     The cache tag covers the SOURCE file's identity (mtime + size), not
     just its path: a regenerated events.parquet (new round, new physical
     ts encoding — the round-3 breakage) invalidates the split instead of
-    silently serving stale batches."""
+    silently serving stale batches. The split is written to a temp sibling
+    and renamed into place (the rename is the commit; a process that loses
+    the race uses the winner's split). Every call re-applies the part
+    files' mtimes, since any copy of the tree (``cp -r``) resets them and
+    a wrong replay order silently drops rows behind the watermark, and
+    rebuilds the split when a part file is missing."""
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     ident = f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}"
-    tag = hashlib.sha256(ident.encode()).hexdigest()[:16]
-    out = _CACHE_ROOT / tag
-    marker = out / "_SUCCESS"
-    if marker.exists():
-        return str(out)
-    out.mkdir(parents=True, exist_ok=True)
-    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    ts = table.column("ts").cast("int64")
-    tmin = pc.min(ts).as_py()
-    tmax = pc.max(ts).as_py()
-    span = max(tmax - tmin, _N_STREAM_FILES)  # degenerate single-ts guard
+    out = _CACHE_ROOT / hashlib.sha256(ident.encode()).hexdigest()[:16]
+    parts = [out / f"part-{i}.parquet" for i in range(_N_STREAM_FILES)]
+    if not all(p.exists() for p in parts):
+        shutil.rmtree(out, ignore_errors=True)
+        _write_split(src, out)
     base = 1_000_000_000  # distinct, strictly increasing mtimes (s)
-    for i in range(_N_STREAM_FILES):
-        lo = tmin + span * i // _N_STREAM_FILES
-        hi = tmin + span * (i + 1) // _N_STREAM_FILES
-        mask = (
-            pc.and_(pc.greater_equal(ts, lo), pc.less(ts, hi))
-            if i < _N_STREAM_FILES - 1
-            else pc.greater_equal(ts, lo)
-        )
-        part = table.filter(mask)
-        path = out / f"part-{i}.parquet"
-        # version 2.6 keeps TIMESTAMP(NANOS) physical int64, identical to
-        # the source file, so the stream reader's nanosAsLong path applies.
-        pq.write_table(part, path, version="2.6")
+    for i, path in enumerate(parts):
         os.utime(path, (base + i * 100, base + i * 100))
-    marker.touch()
     return str(out)
+
+
+def _write_split(src: str, out: Path) -> None:
+    _CACHE_ROOT.mkdir(parents=True, exist_ok=True)
+    tmp = Path(tempfile.mkdtemp(prefix=f".{out.name}-", dir=_CACHE_ROOT))
+    tmp.chmod(0o755)  # mkdtemp's 0o700 would survive the rename
+    try:
+        table = pq.read_table(src)
+        ts = table.column("ts").cast("int64")
+        tmin = pc.min(ts).as_py()
+        tmax = pc.max(ts).as_py()
+        span = max(tmax - tmin, _N_STREAM_FILES)  # degenerate single-ts guard
+        for i in range(_N_STREAM_FILES):
+            lo = tmin + span * i // _N_STREAM_FILES
+            hi = tmin + span * (i + 1) // _N_STREAM_FILES
+            mask = (
+                pc.and_(pc.greater_equal(ts, lo), pc.less(ts, hi))
+                if i < _N_STREAM_FILES - 1
+                else pc.greater_equal(ts, lo)
+            )
+            # version 2.6 keeps TIMESTAMP(NANOS) physical int64, identical to
+            # the source file, so the stream reader's nanosAsLong path applies.
+            part = tmp / f"part-{i}.parquet"
+            pq.write_table(table.filter(mask), part, version="2.6")
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not out.is_dir():  # not a lost race: a real failure
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,11 +44,15 @@ def test_lpa_python_replay(spark):
 
 def test_copurchase_derived_cache_reuse_and_eviction(spark):
     """The shared degree / symmetrized-edge relations are memoized per
-    (applicationId, sf_dir), agree with the edge list, and follow the
-    single-entry eviction convention when the scale factor switches."""
+    (applicationId, sf_dir), agree with the edge list, and keep one live
+    entry per name when the scale factor switches."""
+    import os
+
+    from lua_mapreduce_spark import memo
     from lua_mapreduce_spark.operators import analytics as A
 
-    A.clear_copurchase_cache()
+    names = ("copurchase_pairs", "copurchase_deg", "copurchase_sym")
+    memo.forget(*names)
     deg = A._copurchase_derived(spark, SF_SMALL, "deg")
     sym = A._copurchase_derived(spark, SF_SMALL, "sym")
     assert A._copurchase_derived(spark, SF_SMALL, "deg") is deg  # memoized
@@ -62,11 +66,18 @@ def test_copurchase_derived_cache_reuse_and_eviction(spark):
     assert {(r.src, r.dst) for r in sym.collect()} == {
         (r.u, r.v) for r in pairs
     } | {(r.v, r.u) for r in pairs}
-    # switching sf_dir evicts the previous entries (edge AND derived)
+    # switching sf_dir replaces each name's entry when that name is next
+    # asked for: the edge list and "deg" move to SF_MEDIUM, "sym" is still
+    # the SF_SMALL relation until someone asks for it again
+    def sf_of(name):
+        return memo._LIVE[name][0][1]
+
+    small, medium = os.path.abspath(SF_SMALL), os.path.abspath(SF_MEDIUM)
     A._copurchase_pairs(spark, SF_MEDIUM)
-    assert len(A._CP_CACHE) == 1 and not A._CP_DERIVED
-    A._copurchase_derived(spark, SF_MEDIUM, "deg")
-    assert len(A._CP_DERIVED) == 1
+    assert [sf_of(n) for n in names] == [medium, small, small]
+    deg_medium = A._copurchase_derived(spark, SF_MEDIUM, "deg")
+    assert deg_medium is not deg
+    assert [sf_of(n) for n in names] == [medium, medium, small]
 
 
 # --------------------------------------------------------- market basket

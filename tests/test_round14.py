@@ -137,10 +137,10 @@ def test_novelty_single_text_scan(spark):
     import re as _re
     from contextlib import redirect_stdout
 
+    from lua_mapreduce_spark.memo import forget
     from lua_mapreduce_spark.operators import analytics12 as a12
-    from lua_mapreduce_spark.operators.dedup import clear_signature_cache
 
-    clear_signature_cache()
+    forget("minhash_signatures")
     df = a12.text_ngram_novelty(spark, SF_SMALL)
     buf = io.StringIO()
     with redirect_stdout(buf):

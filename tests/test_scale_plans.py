@@ -437,9 +437,9 @@ def test_curation_single_scan_single_shuffle(spark):
 def test_minhash_single_text_pass(spark):
     """The near-dup pipeline reads the documents table through ONE cached
     signature relation — not one scan per pipeline stage."""
-    from lua_mapreduce_spark.operators.dedup import _MH_CACHE
+    from lua_mapreduce_spark.memo import forget
 
-    _MH_CACHE.clear()
+    forget("minhash_signatures")
     plan = _explain(QUERIES["dedup_minhash_lsh"](spark, SF_MEDIUM))
     # All four uses of the signature relation (band-join a/b sides + the
     # two verification lookups) read the cache; raw parquet scans appear
@@ -647,3 +647,48 @@ def test_no_driver_materialization_in_operators():
                 if not any(sn in line for sn in ok_by_file.get(path.name, [])):
                     offenders.append(f"{path.name}:{i}: {s[:80]}")
     assert not offenders, f"undeclared driver materialization: {offenders}"
+
+
+def _plan_tree(plan: str) -> list[str]:
+    """The operator-tree lines of a formatted plan (before the details)."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    return [re.sub(r"^[\s:|+-]*", "", line) for line in tree[1:]]
+
+
+def test_triangle_count_has_no_src_side_join(spark):
+    """r17 rewrite: the edge stream is re-derived by exploding the
+    out-adjacency, so the only equi-join left is the dst-side lookup —
+    no join of the edge relation back against the adjacency on src."""
+    plan = _explain(QUERIES["graph_triangle_count"](spark, SF_MEDIUM))
+    joins = re.findall(r"Left keys \[\d+\]: \[(\w+)#", plan)
+    assert joins == ["dst"], f"equi-join keys {joins}: src-side join is back"
+    assert any(n.startswith("Generate") for n in _plan_tree(plan)), "explode gone"
+
+
+def test_label_propagation_one_exchange_per_round(spark):
+    """r17 rewrite: each round's two aggregations (per (node, lbl), then
+    per node) share ONE hash exchange on node. The other exchanges are the
+    src-keyed join inputs (edge side and label seed)."""
+    from lua_mapreduce_spark.operators.analytics2 import _LPA_ROUNDS
+
+    plan = _explain(QUERIES["graph_label_propagation"](spark, SF_MEDIUM))
+    keys = re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: [^\n]*\nArguments: hashpartitioning\(([^)]*)\)",
+        plan,
+    )
+    per_round = [k for k in keys if not k.startswith("src#")]
+    assert len(per_round) == _LPA_ROUNDS, keys
+    assert all(re.fullmatch(r"node#\d+L?, \d+", k) for k in per_round), keys
+
+
+def test_bfs_distances_is_a_union_of_checkpointed_legs(spark):
+    """r17 rewrite: every BFS frontier leg is checkpointed once and the
+    visited set is their plain union — never re-materialized per hop, so
+    the final plan reads the legs directly, with no join above them."""
+    plan = _explain(QUERIES["graph_bfs_distances"](spark, SF_MEDIUM))
+    tree = _plan_tree(plan)
+    assert not any("Join" in n for n in tree), tree
+    unions = [i for i, n in enumerate(tree) if n.startswith("Union")]
+    assert unions, f"visited set re-materialized, no union of legs: {tree}"
+    legs = tree[unions[0] + 1 :]
+    assert len(legs) >= 2 and all(n.startswith("Scan ExistingRDD") for n in legs), tree

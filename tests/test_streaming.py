@@ -462,3 +462,48 @@ def test_streaming_hypertable_rollup_equals_batch(spark):
         for r in agg_hypertable_rollup(spark, SF_SMALL).collect()
     }
     assert streamed == batch and streamed
+
+
+def test_stream_batch_cache_survives_reset_mtimes(spark):
+    """A copy of the cached split (``cp -r``) stamps its part files with the
+    copy time, in directory order. The next call must restore the replay
+    order, or the stream reads later events first and the watermark drops
+    the earlier ones: wrong rows, no error."""
+    import os
+    import time
+
+    from lua_mapreduce_spark.operators import streaming_ops as so
+    from tests.oracle import compare
+
+    split = so._batched_events_dir(SF_SMALL)
+    now = time.time()
+    for i in range(so._N_STREAM_FILES):
+        # newest data gets the oldest stamp: the order a copy may leave
+        stamp = now + so._N_STREAM_FILES - i
+        os.utime(f"{split}/part-{i}.parquet", (stamp, stamp))
+    df = so.QUERIES["streaming_dedup_count"](spark, SF_SMALL)
+    res = compare(
+        "streaming_dedup_count", df, so.ORACLES["streaming_dedup_count"], SF_SMALL
+    )
+    assert res.ok, str(res)
+
+
+def test_stream_batch_cache_rebuilds_missing_part():
+    """A split missing a part file is rebuilt, not served."""
+    import os
+
+    import pyarrow.parquet as papq
+
+    from lua_mapreduce_spark.operators import streaming_ops as so
+
+    split = so._batched_events_dir(SF_SMALL)
+    lost = f"{split}/part-1.parquet"
+    n_rows = papq.read_metadata(lost).num_rows
+    os.remove(lost)
+    assert so._batched_events_dir(SF_SMALL) == split
+    assert papq.read_metadata(lost).num_rows == n_rows
+    mtimes = [
+        os.stat(f"{split}/part-{i}.parquet").st_mtime
+        for i in range(so._N_STREAM_FILES)
+    ]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
